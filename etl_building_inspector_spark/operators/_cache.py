@@ -65,11 +65,16 @@ def free_local_checkpoint(df: DataFrame) -> None:
     """Drop a checkpointed DataFrame's blocks NOW (the df becomes
     unusable -- only call on superseded intermediates). The analyzed
     plan of a localCheckpoint()ed frame is a LogicalRDD; its .rdd()
-    is the materialized RDD holding the blocks."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass  # plan shape changed across Spark versions: leak, don't crash
+    is the materialized RDD holding the blocks. A frame DERIVED from
+    the checkpoint (a select or filter over it) holds no blocks of its
+    own, so passing one raises instead of silently freeing nothing."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.nodeName() != "LogicalRDD":
+        raise TypeError(
+            "free_local_checkpoint needs the checkpointed frame itself, "
+            f"not a {plan.nodeName()} over it"
+        )
+    plan.rdd().unpersist(False)
     try:
         _CHECKPOINTED.remove(df)
     except ValueError:

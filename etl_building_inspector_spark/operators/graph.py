@@ -303,9 +303,7 @@ def bfs_hops(
             break
         new_visited = track_local_checkpoint(visited.unionByName(nxt))
         # the union is materialized; the per-round pieces are now dead
-        free_local_checkpoint(visited)
-        if frontier is not visited:
-            free_local_checkpoint(frontier)
+        free_local_checkpoint(visited)  # `frontier` is a filter over it
         free_local_checkpoint(nxt)
         visited = new_visited
         frontier = new_visited.filter(F.col("hops") == h)
@@ -360,6 +358,10 @@ def sssp_bounded(
         .withColumn("dist", F.lit(0).cast("long"))
     )
     frontier = dist
+    # `dist` and `frontier` are selects over the last round's
+    # checkpoint; `held` is that checkpoint itself -- the handle whose
+    # blocks free_local_checkpoint can drop
+    held = dist
     for _ in range(max_hops):
         cand = (
             sym.join(frontier, sym["s"] == frontier["node"])
@@ -387,7 +389,8 @@ def sssp_bounded(
             )
         )
         n_improved = merged.filter(F.col("improved")).count()
-        free_local_checkpoint(dist)
+        free_local_checkpoint(held)
+        held = merged
         if n_improved == 0:
             return merged.select("node", "dist")
         dist = merged.select("node", "dist")

@@ -17,19 +17,30 @@ from pyspark.sql import SparkSession
 def get_spark(app_name: str = "etl-building-inspector-spark") -> SparkSession:
     """Build (or fetch) the shared SparkSession.
 
-    Local parallelism comes from ``SPARK_GRAFT_CPUS`` (default: all
-    cores). ``spark.sql.shuffle.partitions`` is sized to the local core
-    count -- on a real cluster this is overridden by AQE coalescing,
-    which stays enabled here so plans behave the same way at 1000
-    executors.
+    Always a local session: ``local[N]`` with N from ``SPARK_GRAFT_CPUS``
+    (default ``*``, all the JVM's cores). ``spark.sql.shuffle.partitions``
+    is set to the session's ``sparkContext.defaultParallelism`` (N on
+    ``local[N]``), the same figure ``operators._parallel`` fans out to.
+    A cluster deployment builds its own session and sets its own value.
+
+    The width matters most for stateful streams, which AQE never
+    coalesces: every micro-batch runs one state-store task per shuffle
+    partition. Spark fixes a stateful query's partition count when it
+    first starts on a fresh checkpoint and records it there, so a
+    stream restarted from an existing checkpoint keeps that count
+    whatever this session says. Batch exchanges keep AQE coalescing,
+    which stays enabled so plans behave the same way at 1000 executors.
     """
+    return start(session_builder(app_name))
+
+
+def session_builder(app_name: str) -> SparkSession.Builder:
+    """The builder behind get_spark(). A tool that needs one more static
+    conf (the UI, say) adds it to this builder and passes it to start()."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    builder = (
+    return (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        # shuffle sizing: ~cores locally; AQE re-coalesces at runtime so
-        # the same code scales to cluster partition counts.
-        .config("spark.sql.shuffle.partitions", "32")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -50,6 +61,14 @@ def get_spark(app_name: str = "etl-building-inspector-spark") -> SparkSession:
         # structs rely on it for column pruning at scale).
         .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
     )
+
+
+def start(builder: SparkSession.Builder) -> SparkSession:
+    """getOrCreate() plus the settings that need a running context."""
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # shuffle width = local cores; known only once the context is up
+    spark.conf.set(
+        "spark.sql.shuffle.partitions", spark.sparkContext.defaultParallelism
+    )
     return spark

@@ -127,3 +127,31 @@ def test_sssp_converges_before_bound(spark):
     }
     assert got == {1: 0, 2: 5}
     release_persisted()
+
+
+def test_sssp_frees_superseded_rounds(spark):
+    """Each round's checkpoint is freed once the next one is
+    materialized, so the persistent RDDs an sssp_bounded call leaves
+    behind do not grow with the number of rounds."""
+    from etl_building_inspector_spark.operators._cache import release_persisted
+    from etl_building_inspector_spark.operators.graph import sssp_bounded
+
+    jsc = spark.sparkContext._jsc.sc()
+    e = spark.createDataFrame(
+        [(a, b, 1) for a, b in CHAIN], "id_a long, id_b long, w long"
+    )
+    seeds = spark.createDataFrame([(10,)], "node long")
+
+    def held_after(max_hops):
+        release_persisted()
+        base = jsc.getPersistentRDDs().size()
+        got = sssp_bounded(e, seeds, max_hops=max_hops).collect()
+        held = jsc.getPersistentRDDs().size() - base
+        release_persisted()
+        assert jsc.getPersistentRDDs().size() == base
+        return len(got), held
+
+    # the chain keeps improving every round up to its length, so both
+    # calls run exactly max_hops rounds
+    assert held_after(2) == (3, 2)
+    assert held_after(6) == (7, 2)

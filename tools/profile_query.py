@@ -1,7 +1,7 @@
 """Per-query stage-level profiler (optimization rounds).
 
 Runs one or more registered queries with the noop sink in a session
-configured EXACTLY like session.get_spark() except the UI is enabled,
+built by session.get_spark()'s own builder with the UI enabled,
 then dumps per-job / per-stage wall-clock, task time, shuffle bytes and
 row counts from the UI REST API. This is the guide's "empirical"
 measurement loop (spark_optimization_guide.md section 1.1 / 7.1) in a
@@ -26,32 +26,16 @@ import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession  # noqa: E402
+from etl_building_inspector_spark.session import session_builder, start  # noqa: E402
 
 
-def get_spark_with_ui(app_name: str = "profile") -> SparkSession:
-    """session.get_spark()'s config, plus the UI for the REST API."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.ansi.enabled", "false")
-        .config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
-        )
+def get_spark_with_ui(app_name: str = "profile"):
+    """session.get_spark()'s session, plus the UI for the REST API."""
+    return start(
+        session_builder(app_name)
         .config("spark.ui.enabled", "true")
         .config("spark.ui.port", "4055")
-        .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
     )
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    return spark
 
 
 def api(path: str):
