@@ -1,7 +1,8 @@
-"""Independent property tests for the WINDOW_R8-staged queries
-(round 7, VERDICT r6 #5: extend the r6 recompute layer one window
-ahead, so the r8 cohort's values are pinned by something other than
-the twin pair before their driver window opens).
+"""Independent property tests for the round-8 driver-window queries
+(the keys of CORRECTNESS_r08.json; round 7, VERDICT r6 #5: extend the
+r6 recompute layer one window ahead, so the r8 cohort's values are
+pinned by something other than the twin pair before their driver
+window opens).
 
 Same discipline as tests/test_r6_properties.py: each test recomputes
 the CLAIMED PROPERTY from the raw parquet with plain pandas/numpy/

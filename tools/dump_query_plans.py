@@ -10,6 +10,15 @@ the last micro-batch of streaming_dedup over the events fixture
 replayed twice (the stream_replay benchmark's stateful stream). To dump
 the "before" side of a change, run this file from a checkout of the
 parent commit: it imports the package of the checkout it sits in.
+
+The bench's headline queries, from the checkout root:
+
+  python tools/dump_query_plans.py headline <suffix> \
+      $(python -c 'from bench import HEADLINE; print(*HEADLINE)')
+
+Plans to look for: dimension joins are BroadcastHashJoin; parquet scans
+carry PushedFilters and a pruned ReadSchema; aggregations run a
+map-side partial_ aggregation before their single Exchange.
 """
 
 from __future__ import annotations
