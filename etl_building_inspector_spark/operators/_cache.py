@@ -21,16 +21,32 @@ not its DataFrame, across query boundaries.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 _PERSISTED: list[DataFrame] = []
 _CHECKPOINTED: list[DataFrame] = []
+
+# Largest frame an iterative operator finishes on the driver: 1 << 20
+# rows of three bigint columns is ~24 MB of Arrow (SCALING.md,
+# "Iterative algorithms").
+LOCAL_FINISH_ROWS = 1 << 20
 
 
 def track_persist(df: DataFrame) -> DataFrame:
     p = df.persist()
     _PERSISTED.append(p)
     return p
+
+
+def collect_if_small(df: DataFrame) -> pa.Table | None:
+    """The frame as a pyarrow Table if it has at most LOCAL_FINISH_ROWS
+    rows, else None. `df` must be track_persist()ed: the count is its
+    first action and fills the cache that the distributed rounds (or
+    the collect) read next."""
+    if df.count() > LOCAL_FINISH_ROWS:
+        return None
+    return df.toArrow()
 
 
 def track_local_checkpoint(df: DataFrame) -> DataFrame:

@@ -14,14 +14,23 @@ Per round: one equi-join (frontier → neighbors) + one left-anti join
 localCheckpoint per round cuts lineage; superseded rounds' blocks are
 freed (operators/_cache contract). max_hops bounds state and rounds —
 the BFS twin of a watermark.
+
+Small graphs skip the rounds: when the symmetrized edge set has at
+most _cache.LOCAL_FINISH_ROWS rows, bfs_hops and sssp_bounded collect
+it once over Arrow and finish on the driver (_hop_bounded_local).
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import _cache
 from ._cache import (
+    collect_if_small,
     free_local_checkpoint,
     track_local_checkpoint,
     track_local_checkpoint_lazy,
@@ -249,6 +258,81 @@ def pagerank_integer(
     return ranks
 
 
+_UNREACHED = 2**62  # SSSP's "no distance yet" on both paths
+
+
+def _hop_bounded_local(
+    sym: DataFrame, seeds: DataFrame, max_hops: int, col: str
+) -> DataFrame | None:
+    """Driver-side finish of bfs_hops / sssp_bounded, or None when the
+    symmetrized edge set `sym` (s, d[, w]; no w means unit weights,
+    i.e. hop counts) or the seed rows exceed _cache.LOCAL_FINISH_ROWS.
+    Both are collected once over Arrow; the seeds are deduplicated
+    here, which spares Spark a distinct job. Synchronous Bellman-Ford
+    rounds: round k relaxes every edge out of the nodes improved in
+    round k-1 at once, so after k rounds each distance is the minimum
+    over walks of at most k edges -- the hop bound the oracle takes.
+    (Dijkstra would return unbounded shortest paths.) Nulls follow the
+    distributed loop: a null seed is a (null, 0) row, and each round
+    whose frontier has an edge to a null node adds one null-node
+    row."""
+    tbl = collect_if_small(sym)
+    if tbl is None:
+        return None
+    start = (
+        seeds.select(F.col(seeds.columns[0]).cast("long"))
+        .limit(_cache.LOCAL_FINISH_ROWS + 1)
+        .toArrow()
+        .column(0)
+    )
+    if len(start) > _cache.LOCAL_FINISH_ROWS:
+        return None
+    tbl = tbl.filter(pc.is_valid(tbl.column("s")))
+    s, d = tbl.column("s"), tbl.column("d")
+    w = tbl.column("w") if "w" in tbl.column_names else pa.repeat(1, len(tbl))
+    ids = np.unique(
+        np.concatenate(
+            [
+                s.to_numpy(),
+                d.drop_null().to_numpy(),
+                start.drop_null().to_numpy(),
+            ]
+        )
+    )
+    si = np.searchsorted(ids, s.to_numpy())
+    has_d = pc.is_valid(d).to_numpy(zero_copy_only=False)
+    di = np.searchsorted(ids, d.fill_null(0).to_numpy())
+    has_w = pc.is_valid(w).to_numpy(zero_copy_only=False)
+    wv = w.fill_null(0).to_numpy()
+
+    dist = np.full(len(ids), _UNREACHED, np.int64)
+    seen = np.zeros(len(ids), bool)
+    seen[np.searchsorted(ids, start.drop_null().to_numpy())] = True
+    dist[seen] = 0
+    null_rows = [0] if start.null_count else []
+    frontier = seen.copy()
+    for _ in range(max_hops):
+        out = frontier[si]
+        nd = dist[si] + wv
+        to_node = out & has_d
+        seen[di[to_node]] = True
+        cand = np.full(len(ids), _UNREACHED, np.int64)
+        relax = to_node & has_w
+        np.minimum.at(cand, di[relax], nd[relax])
+        to_null = out & ~has_d
+        if to_null.any():
+            null_rows.append(nd[to_null & has_w].min(initial=_UNREACHED))
+        frontier = cand < dist
+        dist = np.minimum(dist, cand)
+        if not frontier.any():
+            break
+    node = pa.concat_arrays(
+        [pa.array(ids[seen], pa.int64()), pa.nulls(len(null_rows), pa.int64())]
+    )
+    value = pa.array(np.concatenate([dist[seen], null_rows]), pa.int64())
+    return sym.sparkSession.createDataFrame(pa.table({"node": node, col: value}))
+
+
 def bfs_hops(
     edges: DataFrame,
     seeds: DataFrame,
@@ -260,7 +344,12 @@ def bfs_hops(
     undirected `edges` graph. Returns (node, hops); nodes further than
     max_hops (or unreachable) are absent. `seeds` must have one
     column; seed nodes get hops=0 whether or not they appear in
-    edges."""
+    edges.
+
+    The edge set never shrinks across hops, so the size gate is taken
+    once, at the start: at most _cache.LOCAL_FINISH_ROWS symmetrized
+    edges finish on the driver with one collect (unit-weight rounds of
+    _hop_bounded_local); larger graphs run the frontier loop below."""
     # symmetrize in ONE pass (explode, not self-union): the union form
     # evaluated the upstream edge pipeline twice when `sym` first
     # materializes -- for the near-dup seed graphs that upstream is
@@ -280,6 +369,9 @@ def bfs_hops(
         ).alias("__e")
     ).select(F.col("__e.s").alias("s"), F.col("__e.d").alias("d"))
     sym = track_persist(sym)
+    local = _hop_bounded_local(sym, seeds, max_hops, "hops")
+    if local is not None:
+        return local
     frontier = track_local_checkpoint(
         seeds.select(F.col(seeds.columns[0]).cast("long").alias("node"))
         .distinct()
@@ -331,6 +423,11 @@ def sssp_bounded(
     engine-portable. The hop bound is both the convergence guarantee
     (negative weights impossible here, but cycles are) and the state
     bound -- the SSSP twin of bfs_hops' max_hops.
+
+    Small graphs (at most _cache.LOCAL_FINISH_ROWS symmetrized edges,
+    gated once at the start like bfs_hops) finish on the driver with
+    the same synchronous hop-bounded rounds in numpy
+    (_hop_bounded_local) -- not Dijkstra, which ignores max_hops.
     """
     # symmetrize in ONE pass (explode, not self-union) -- see bfs_hops
     sym = edges.select(
@@ -352,6 +449,9 @@ def sssp_bounded(
         F.col("__e.s").alias("s"), F.col("__e.d").alias("d"), F.col("__e.w").alias("w")
     )
     sym = track_persist(sym)
+    local = _hop_bounded_local(sym, seeds, max_hops, "dist")
+    if local is not None:
+        return local
     dist = track_local_checkpoint(
         seeds.select(F.col(seeds.columns[0]).cast("long").alias("node"))
         .distinct()
@@ -378,13 +478,13 @@ def sssp_bounded(
             .select(
                 "node",
                 F.least(
-                    F.coalesce(F.col("dist"), F.lit(2**62)),
-                    F.coalesce(F.col("nd"), F.lit(2**62)),
+                    F.coalesce(F.col("dist"), F.lit(_UNREACHED)),
+                    F.coalesce(F.col("nd"), F.lit(_UNREACHED)),
                 ).alias("dist"),
                 # improved = candidate strictly beats the settled value
                 (
                     F.col("nd").isNotNull()
-                    & (F.col("nd") < F.coalesce(F.col("dist"), F.lit(2**62)))
+                    & (F.col("nd") < F.coalesce(F.col("dist"), F.lit(_UNREACHED)))
                 ).alias("improved"),
             )
         )

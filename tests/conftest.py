@@ -108,3 +108,24 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def finish_paths(monkeypatch):
+    """Run an iterative-operator test body on both of its paths:
+    `driver` keeps the default bound, so fixture graphs finish on the
+    driver, and `distributed` sets _cache.LOCAL_FINISH_ROWS to -1, so
+    every round runs as Spark jobs (even on an empty edge set, which 0
+    would still send to the driver). Use as
+    `for path in finish_paths(): ...` and name `path` in each assert.
+    A loop rather than fixture params keeps one test id per test."""
+    from etl_building_inspector_spark.operators import _cache
+
+    def paths():
+        default = _cache.LOCAL_FINISH_ROWS
+        for path, bound in (("driver", default), ("distributed", -1)):
+            monkeypatch.setattr(_cache, "LOCAL_FINISH_ROWS", bound)
+            yield path
+            _cache.release_persisted()
+
+    return paths

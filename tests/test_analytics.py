@@ -30,45 +30,49 @@ def _seeds(spark, ids):
     return spark.createDataFrame([(i,) for i in ids], "node long")
 
 
-def test_sssp_prefers_cheaper_two_hop_path(spark):
+def test_sssp_prefers_cheaper_two_hop_path(spark, finish_paths):
     # direct edge 0-2 costs 10; path 0-1-2 costs 2+3=5
     edges = _edges(spark, [(0, 2, 10), (0, 1, 2), (1, 2, 3)])
-    out = {
-        r["node"]: r["dist"]
-        for r in sssp_bounded(edges, _seeds(spark, [0]), max_hops=3).collect()
-    }
-    assert out == {0: 0, 1: 2, 2: 5}
+    for path in finish_paths():
+        out = {
+            r["node"]: r["dist"]
+            for r in sssp_bounded(edges, _seeds(spark, [0]), max_hops=3).collect()
+        }
+        assert out == {0: 0, 1: 2, 2: 5}, path
 
 
-def test_sssp_hop_bound_limits_relaxation(spark):
+def test_sssp_hop_bound_limits_relaxation(spark, finish_paths):
     # chain 0-1-2-3, all weight 1; max_hops=2 must not reach node 3
     edges = _edges(spark, [(0, 1, 1), (1, 2, 1), (2, 3, 1)])
-    out = {
-        r["node"]: r["dist"]
-        for r in sssp_bounded(edges, _seeds(spark, [0]), max_hops=2).collect()
-    }
-    assert out == {0: 0, 1: 1, 2: 2}
+    for path in finish_paths():
+        out = {
+            r["node"]: r["dist"]
+            for r in sssp_bounded(edges, _seeds(spark, [0]), max_hops=2).collect()
+        }
+        assert out == {0: 0, 1: 1, 2: 2}, path
 
 
-def test_sssp_unreachable_absent_and_multi_seed_min(spark):
+def test_sssp_unreachable_absent_and_multi_seed_min(spark, finish_paths):
     # two components; node 9 is isolated from seed 0 but seed 8 covers it
     edges = _edges(spark, [(0, 1, 4), (8, 9, 1)])
-    out = {
-        r["node"]: r["dist"]
-        for r in sssp_bounded(edges, _seeds(spark, [0, 8]), max_hops=3).collect()
-    }
-    assert out == {0: 0, 1: 4, 8: 0, 9: 1}
+    for path in finish_paths():
+        out = {
+            r["node"]: r["dist"]
+            for r in sssp_bounded(edges, _seeds(spark, [0, 8]), max_hops=3).collect()
+        }
+        assert out == {0: 0, 1: 4, 8: 0, 9: 1}, path
 
 
-def test_sssp_undirected_and_early_stop(spark):
+def test_sssp_undirected_and_early_stop(spark, finish_paths):
     # early convergence (no improvement after round 1) must still
     # return settled distances; edges are relaxed in both directions
     edges = _edges(spark, [(5, 4, 7)])
-    out = {
-        r["node"]: r["dist"]
-        for r in sssp_bounded(edges, _seeds(spark, [4]), max_hops=5).collect()
-    }
-    assert out == {4: 0, 5: 7}
+    for path in finish_paths():
+        out = {
+            r["node"]: r["dist"]
+            for r in sssp_bounded(edges, _seeds(spark, [4]), max_hops=5).collect()
+        }
+        assert out == {4: 0, 5: 7}, path
 
 
 # --- skyline ----------------------------------------------------------------
@@ -310,13 +314,14 @@ def test_funnel_empty_events_reports_zero_stages(spark, tmp_path):
     assert out == {"signup": 0, "view": 0, "click": 0, "purchase": 0}
 
 
-def test_sssp_empty_edges_returns_seeds_only(spark):
+def test_sssp_empty_edges_returns_seeds_only(spark, finish_paths):
     edges = _edges(spark, [])
-    out = {
-        r["node"]: r["dist"]
-        for r in sssp_bounded(edges, _seeds(spark, [7]), max_hops=3).collect()
-    }
-    assert out == {7: 0}
+    for path in finish_paths():
+        out = {
+            r["node"]: r["dist"]
+            for r in sssp_bounded(edges, _seeds(spark, [7]), max_hops=3).collect()
+        }
+        assert out == {7: 0}, path
 
 
 def test_attribution_empty_events_yields_no_rows(spark, tmp_path):

@@ -10,6 +10,7 @@ from collections import Counter
 import duckdb
 import pytest
 
+from etl_building_inspector_spark.operators import _cache
 from etl_building_inspector_spark.plans.registry import ORACLES, QUERIES
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -36,8 +37,7 @@ def duck():
     return con
 
 
-@pytest.mark.parametrize("name", sorted(ORACLES))
-def test_query_matches_oracle(name, spark, duck):
+def _assert_matches_oracle(name, spark, duck):
     sdf = QUERIES[name](spark, SF_DIR)
     spark_cols = sdf.columns
     res = duck.execute(ORACLES[name])
@@ -53,6 +53,38 @@ def test_query_matches_oracle(name, spark, duck):
         tuple(_canon(r[i]) for i in d_idx) for r in res.fetchall()
     )
     assert spark_rows == duck_rows
+
+
+@pytest.mark.parametrize("name", sorted(ORACLES))
+def test_query_matches_oracle(name, spark, duck):
+    _assert_matches_oracle(name, spark, duck)
+
+
+# Every fixture graph is small enough to finish on the driver, so the
+# oracle sweep above never reaches the distributed rounds of the
+# iterative operators -- the path that runs at scale. These queries
+# run them again with the local finish turned off, and check that each
+# returns its persistent RDDs to baseline.
+ITERATIVE = [
+    "dedup_cluster_assign",
+    "dedup_cluster_assign_lss",
+    "dedup_cluster_incremental",
+    "dedup_keep_representatives",
+    "er_resolution_clusters",
+    "graph_bfs_hops",
+    "graph_sssp_bounded",
+]
+
+
+@pytest.mark.parametrize("name", ITERATIVE)
+def test_iterative_distributed_matches_oracle(name, spark, duck, monkeypatch):
+    monkeypatch.setattr(_cache, "LOCAL_FINISH_ROWS", -1)
+    jsc = spark.sparkContext._jsc.sc()
+    _cache.release_persisted()
+    base = jsc.getPersistentRDDs().size()
+    _assert_matches_oracle(name, spark, duck)
+    _cache.release_persisted()
+    assert jsc.getPersistentRDDs().size() == base
 
 
 @pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLES)))

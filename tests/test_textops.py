@@ -24,32 +24,36 @@ from etl_building_inspector_spark.operators.textops import (
 # --- connected components -------------------------------------------------
 
 
-def test_cc_chain_collapses_to_one_component(spark):
+def test_cc_chain_collapses_to_one_component(spark, finish_paths):
     """A path graph 1-2-3-4-5 needs label propagation across multiple
     hops (diameter 4) — exactly what a naive one-round min-join gets
     wrong."""
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5)], ["id_a", "id_b"]
     )
-    out = {
-        r["node"]: r["component"]
-        for r in connected_components(edges).collect()
-    }
-    assert out == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1}
+    for path in finish_paths():
+        out = {
+            r["node"]: r["component"]
+            for r in connected_components(edges).collect()
+        }
+        assert out == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1}, path
 
 
-def test_cc_two_components_and_isolated_pair(spark):
+def test_cc_two_components_and_isolated_pair(spark, finish_paths):
     edges = spark.createDataFrame(
         [(10, 11), (11, 12), (20, 21), (30, 31)], ["id_a", "id_b"]
     )
-    out = {
-        r["node"]: r["component"]
-        for r in connected_components(edges).collect()
-    }
-    assert out == {10: 10, 11: 10, 12: 10, 20: 20, 21: 20, 30: 30, 31: 30}
+    for path in finish_paths():
+        out = {
+            r["node"]: r["component"]
+            for r in connected_components(edges).collect()
+        }
+        assert out == {
+            10: 10, 11: 10, 12: 10, 20: 20, 21: 20, 30: 30, 31: 30
+        }, path
 
 
-def test_cc_alternating_matches_min_label(spark):
+def test_cc_alternating_matches_min_label(spark, finish_paths):
     """large-star/small-star must agree with min-label propagation on
     adversarial shapes: a LONG PATH (diameter 19 — where min-label
     needs ~19 rounds and alternating needs O(log n)), a high-degree
@@ -70,18 +74,20 @@ def test_cc_alternating_matches_min_label(spark):
     ]
     edges = path + hub + clique + rand + [(999, 999), (119, 100), (1, 2), (1, 2)]
     df = spark.createDataFrame(edges, ["id_a", "id_b"])
-    base = {
-        r["node"]: r["component"] for r in connected_components(df).collect()
-    }
-    alt = {
-        r["node"]: r["component"]
-        for r in connected_components_alternating(df).collect()
-    }
-    assert alt == base
-    assert alt[119] == 100 and alt[229] == 200 and alt[999] == 999
+    for path in finish_paths():
+        base = {
+            r["node"]: r["component"]
+            for r in connected_components(df).collect()
+        }
+        alt = {
+            r["node"]: r["component"]
+            for r in connected_components_alternating(df).collect()
+        }
+        assert alt == base, path
+        assert alt[119] == 100 and alt[229] == 200 and alt[999] == 999, path
 
 
-def test_bfs_hops_hand_graph(spark):
+def test_bfs_hops_hand_graph(spark, finish_paths):
     """Path 1-2-3-4-5 with seed {1}: hops bounded at 3 (node 5 absent);
     seed isolated node 99 gets 0; unreachable component {10,11} absent."""
     from etl_building_inspector_spark.operators.graph import bfs_hops
@@ -90,8 +96,11 @@ def test_bfs_hops_hand_graph(spark):
         [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11)], ["id_a", "id_b"]
     )
     seeds = spark.createDataFrame([(1,), (99,)], ["doc_id"])
-    out = {r.node: r.hops for r in bfs_hops(edges, seeds, max_hops=3).collect()}
-    assert out == {1: 0, 99: 0, 2: 1, 3: 2, 4: 3}
+    for path in finish_paths():
+        out = {
+            r.node: r.hops for r in bfs_hops(edges, seeds, max_hops=3).collect()
+        }
+        assert out == {1: 0, 99: 0, 2: 1, 3: 2, 4: 3}, path
 
 
 # --- PII ------------------------------------------------------------------
