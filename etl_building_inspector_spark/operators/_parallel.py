@@ -1,132 +1,67 @@
 """Scan fan-out for expensive narrow passes.
 
-The fixture tables are single-file, single-row-group parquet, so every
-scan is ONE input split regardless of spark.sql.files.maxPartitionBytes
-(a parquet split below row-group granularity reads zero rows). Any
-operator that does expensive per-row work BEFORE its first shuffle --
-regex normalization, shingle explode, one sha256/md5 per shingle,
-interpreted higher-order-function folds -- therefore ran on 1-2 cores
-of a 32-core box (measured: dedup_cluster_assign's pair build 7.1 s of
-task time on n=2 tasks; quality_ngram_lm_score 4.6 s on n=1).
+A parquet split below row-group granularity reads zero rows, so a
+single-row-group file is ONE input split whatever
+spark.sql.files.maxPartitionBytes says. Every fixture table is such a
+file, and an operator doing expensive per-row work before its first
+shuffle (regex normalization, shingle explode, one sha256 per shingle,
+interpreted higher-order-function folds) therefore ran on 1-2 cores
+(measured: dedup_cluster_assign's pair build 7.1 s of task time on 2
+tasks). fan_out_scan round-robins such an input to the session's
+defaultParallelism before the heavy pass (optimization guide 2.5:
+"repartition immediately after the read"). The splits are counted
+from metadata, never from the plan's text (SCALING.md, "Scan
+fan-out"):
 
-Fix per the optimization guide section 2.5 ("input skew: one huge
-unsplittable file ... repartition immediately after the read"):
-round-robin repartition the narrow input to the session's default
-parallelism BEFORE the heavy pass. Scale-adaptive, not local-tuned:
+  * the frame reads files: at least defaultParallelism files is
+    already wide; fewer parquet files count their footers' row groups,
+    read on the driver;
+  * the frame reads a persist()ed frame: its partition count, whose
+    probe fills the cache the operator reads next;
+  * anything else (foreachBatch micro-batches, local data, checkpoints,
+    non-parquet files) is left alone.
 
-  * target = sparkContext.defaultParallelism (cores locally, total
-    executor slots on a cluster), not a constant;
-  * NO-OP when the input already has >= target partitions -- at real
-    scale the corpus arrives as thousands of splits and this helper
-    must never REDUCE that parallelism.
-
-The shuffle this inserts moves only the slim (id, text) projection --
-megabytes here; at 100 TB the no-op branch applies -- and buys a
-full-width stage for the dominant CPU cost. Round-robin repartition is
-deterministic under retry (sortBeforeRepartition, SPARK-23207), and
-every downstream consumer is order-insensitive (aggregates, equi-joins,
-windows with total orderings), so results are bit-identical -- verified
-against the DuckDB oracles for every affected query.
+It is a no-op once the input has defaultParallelism splits, so at
+scale it never reduces parallelism. Round-robin repartition is
+deterministic under retry (SPARK-23207) and every consumer is
+order-insensitive, so results are unchanged.
 """
 
 from __future__ import annotations
 
+import pyarrow.parquet as pq
+from pyarrow import fs
 from pyspark.sql import DataFrame
 
-# Logical operators that plan to an EXCHANGE (a shuffle query stage):
-# converting such a plan to an RDD to probe its partition count would,
-# under AQE, eagerly materialize every intermediate query stage, and
-# that shuffle work is discarded -- no exchange reuse across separate
-# executions (ADVICE r10 #1). fan_out_scan is FOR scan-shaped inputs;
-# when one of these appears anywhere in the analyzed plan the probe is
-# skipped and the input left alone (the heavy pass then runs at
-# whatever parallelism the upstream shuffle already established, which
-# is the right answer for a shuffled input). Narrow operators (union
-# of scans, generate/explode, sample, map-in-arrow) stay probe-able:
-# their RDD conversion builds the RDD without running any job.
-_NON_SCAN_NODES = (
-    "Join",
-    "Aggregate",
-    "Window",
-    "Deduplicate",
-    "Distinct",
-    "Repartition",
-    "RepartitionByExpression",
-    "Sort",
-    "GlobalLimit",
-    "Intersect",
-    "Except",
-    "Expand",
-    "FlatMapGroupsInPandas",
-    "CoGroup",
-)
+
+def _row_groups(uri: str) -> int:
+    filesystem, path = fs.FileSystem.from_uri(uri)
+    return pq.read_metadata(path, filesystem=filesystem).num_row_groups
 
 
-_NON_SCAN_RE = None  # compiled lazily; module import stays regex-free
-
-
-def _is_scan_only(df: DataFrame) -> bool:
-    """True iff the ANALYZED logical plan is a leaf relation under
-    narrow row-preserving ops only (Project/Filter/SubqueryAlias...).
-    String inspection of the analyzed plan: pure driver-side, never
-    triggers execution, and cheap for scan-shaped plans. Nodes below
-    the root carry tree prefixes ('+- ', ':- ', ':  +- ', ...), so the
-    match anchors on the prefix, not on line start."""
-    global _NON_SCAN_RE
-    if _NON_SCAN_RE is None:
-        import re
-
-        _NON_SCAN_RE = re.compile(
-            r"(?m)^[ :+-]*(?:" + "|".join(_NON_SCAN_NODES) + r")\b"
-        )
-    try:
-        plan = df._jdf.queryExecution().analyzed().toString()
-    except Exception:
-        return False
-    return _NON_SCAN_RE.search(plan) is None
-
-
-def _references_cache(df: DataFrame) -> bool:
-    """True iff cache substitution replaces part of this plan with an
-    InMemoryRelation -- i.e. the input (or an ancestor) was persist()ed
-    by the caller. Driver-only plan inspection, executes nothing."""
-    try:
-        return "InMemoryRelation" in df._jdf.queryExecution().withCachedData().toString()
-    except Exception:
-        return False
+def _reads_cache(df: DataFrame) -> bool:
+    """Cache substitution leaves an InMemoryRelation wherever the plan
+    reads a persist()ed frame."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    return any(
+        leaves.apply(i).nodeName() == "InMemoryRelation" for i in range(leaves.size())
+    )
 
 
 def fan_out_scan(df: DataFrame) -> DataFrame:
-    """Repartition `df` to defaultParallelism iff it currently has
-    fewer partitions (see module docstring). Call it on a slim
-    projection (id + the columns the heavy pass needs), right before
-    the expensive narrow work.
-
-    The partition probe (`df.rdd.getNumPartitions()`) runs in two
-    cases only (ADVICE r10 #1):
-
-      * the analyzed plan is scan-shaped (leaf relations under narrow
-        ops only): the RDD conversion is a few ms of driver work and
-        executes nothing;
-      * the plan reads a persist()ed intermediate (cache substitution
-        yields an InMemoryRelation): under AQE the probe materializes
-        the upstream stages, but that work fills the registered cache
-        the operator is about to reuse, so nothing is discarded (this
-        is the pipeline_corpus_curation_e2e shape, A/B-kept in r10).
-
-    For any other input (unpersisted join/aggregate/window upstream)
-    the helper is a no-op -- the probe would execute the upstream
-    stages once and throw the result away."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    if not (_is_scan_only(df) or _references_cache(df)):
+    """`df` repartitioned round-robin to defaultParallelism iff it has
+    fewer splits (see module docstring). Call it on a slim projection
+    (id + the columns the heavy pass needs), right before the
+    expensive narrow work. Deciding runs no Spark job except for a
+    frame that reads a persist()ed frame."""
+    target = df.sparkSession.sparkContext.defaultParallelism
+    files = df.inputFiles()
+    if len(files) >= target:
         return df
-    try:
-        current = df.rdd.getNumPartitions()
-    except Exception:
-        # plan not convertible cheaply (streaming source pre-batch):
-        # leave the input alone rather than fail the build
+    if files and all(f.endswith(".parquet") for f in files):
+        splits = sum(_row_groups(f) for f in files)
+    elif not files and _reads_cache(df):
+        splits = df.rdd.getNumPartitions()
+    else:
         return df
-    if current >= target:
-        return df
-    return df.repartition(target)
+    return df if splits >= target else df.repartition(target)

@@ -62,8 +62,7 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 
 
 def minhash_signature(
-    df: DataFrame, text_col: str, k: int = 8, shingle_n: int = 3,
-    fanout: bool = True,
+    df: DataFrame, text_col: str, k: int = 8, shingle_n: int = 3
 ) -> DataFrame:
     """Append minhash_0..minhash_{k-1} columns: minhash_i = min over
     shingles of the i-th 8-hex-char chunk of sha256(shingle).
@@ -83,13 +82,9 @@ def minhash_signature(
     if k > 8:
         raise ValueError("k <= 8: sha256 yields 8 disjoint 8-hex chunks")
     # one sha256 per shingle via interpreted HOFs is the dominant CPU
-    # of every minhash consumer; spread the scan's 1-2 splits across
+    # of every minhash consumer; spread a single-row-group scan across
     # the session's cores first (guide 2.5 -- see operators/_parallel).
-    # `fanout=False` for micro-batch callers (streaming index refresh):
-    # a few hundred rows per batch make the exchange pure overhead
-    # (A/B'd 0.92x in the r10 optimization round).
-    if fanout:
-        df = fan_out_scan(df)
+    df = fan_out_scan(df)
     sh_col = "__mh_shingles"
     h_col = "__mh_hashes"
     staged = df.withColumn(sh_col, shingles(text_col, shingle_n))
@@ -121,7 +116,6 @@ def minhash_lsh_buckets(
     bands: int = 4,
     shingle_n: int = 3,
     sig: DataFrame | None = None,
-    fanout: bool = True,
 ) -> DataFrame:
     """(id, band, key) band-bucket assignments — the LSH blocking
     table minhash_lsh_pairs self-joins, exposed so diagnostics (the
@@ -130,9 +124,7 @@ def minhash_lsh_buckets(
     minhash_lsh_pairs."""
     rows_per_band = k // bands
     if sig is None:
-        sig = minhash_signature(
-            df.select(id_col, text_col), text_col, k, shingle_n, fanout=fanout
-        )
+        sig = minhash_signature(df.select(id_col, text_col), text_col, k, shingle_n)
     band_cols = [
         F.struct(
             F.lit(b).alias("band"),
@@ -822,7 +814,6 @@ def minhash_band_index(
     k: int = 8,
     bands: int = 4,
     shingle_n: int = 3,
-    fanout: bool = True,
 ) -> DataFrame:
     """The persisted artifact of an incremental near-dup pipeline:
     band buckets PRE-AGGREGATED to one row per (band, key) carrying
@@ -837,9 +828,7 @@ def minhash_band_index(
     aggregation; the result is exactly what a daily pipeline persists
     (bucketed by `key`) between runs.
     """
-    buckets = minhash_lsh_buckets(
-        df, text_col, id_col, k, bands, shingle_n, fanout=fanout
-    )
+    buckets = minhash_lsh_buckets(df, text_col, id_col, k, bands, shingle_n)
     return buckets.groupBy("band", "key").agg(
         F.count("*").cast("long").alias("n_index_docs"),
         F.min(id_col).cast("long").alias("first_match_id"),

@@ -8,8 +8,10 @@ sites, not here -- keeping the loader policy-free.
 
 from __future__ import annotations
 
+import json
 import os
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 from ..schemas import TESTDATA_TABLES
@@ -21,26 +23,38 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one fixture table. Schema comes from the parquet footer
     (self-describing), so no inference scan happens.
 
-    events.parquet stores TIMESTAMP(NANOS), which Spark's vectorized
-    parquet reader rejects; read it as raw INT64 nanos
-    (legacy.parquet.nanosAsLong) and truncate to microseconds --
+    An events.parquet whose `ts` is TIMESTAMP(NANOS), which Spark's
+    vectorized parquet reader rejects, is read as raw INT64 nanos
+    (legacy.parquet.nanosAsLong) and truncated to microseconds --
     exactly what DuckDB's reader does, keeping the oracle comparable.
+    The footer says which unit the file holds, so the session-global
+    conf is set (and then unset) only around a NANOS read; the
+    fixtures store MICROS and never touch it.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
-    if name == "events":
+    if name == "events" and _ts_is_nanos(path):
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         try:
             from pyspark.sql import functions as F
 
-            df = spark.read.parquet(path)
-            if dict(df.dtypes).get("ts") == "bigint":
-                # integer division: epoch-nanos (~1.7e18) overflow the
-                # 53-bit double mantissa, so never divide with `/`.
-                df = df.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
-            return df
+            # integer division: epoch-nanos (~1.7e18) overflow the
+            # 53-bit double mantissa, so never divide with `/`.
+            return spark.read.parquet(path).withColumn(
+                "ts", F.expr("timestamp_micros(ts DIV 1000)")
+            )
         finally:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+            spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
     return spark.read.parquet(path)
+
+
+def _ts_is_nanos(path: str) -> bool:
+    """True iff the footer stores `ts` as TIMESTAMP(NANOS). `path` is a
+    parquet file or a directory of them, all written alike. The parquet
+    logical type is read, not the arrow type, which pyarrow also maps
+    Spark's INT96 timestamps to."""
+    schema = pq.read_metadata(pq.ParquetDataset(path).files[0]).schema
+    ts = schema.column(schema.names.index("ts"))
+    return json.loads(ts.logical_type.to_json()).get("timeUnit") == "nanoseconds"
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

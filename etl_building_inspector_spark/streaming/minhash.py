@@ -79,9 +79,13 @@ def streaming_minhash_index_refresh(
         # min=id), so pre-aggregating the batch into its own index
         # before merging spent a second shuffle per micro-batch for an
         # intermediate nobody reads. merge(index, 1-doc rows) is the
-        # same commutative monoid fold, so the refreshed index is
-        # bit-identical (when no index exists yet, the merge of the
-        # batch's own rows IS minhash_band_index(batch)).
+        # same commutative monoid fold. These rows cast the id to long
+        # BEFORE the min, where minhash_band_index takes the min first;
+        # the two agree when id_col is an integer column (min commutes
+        # with a widening cast), which every registered caller's
+        # bigint doc_id is. Under that precondition the refreshed
+        # index is bit-identical (when no index exists yet, the merge
+        # of the batch's own rows IS minhash_band_index(batch)).
         raw_b = minhash_lsh_buckets(
             batch_df.select(id_col, text_col),
             text_col,
@@ -89,12 +93,6 @@ def streaming_minhash_index_refresh(
             k=k,
             bands=bands,
             shingle_n=shingle_n,
-            # micro-batches are a few hundred rows: the scan fan-out's
-            # exchange is pure overhead per batch (A/B'd 0.92x, r10
-            # optimization round) -- at production batch sizes the
-            # batch arrives as many splits and fan-out is a no-op
-            # anyway, so skipping it here loses nothing at scale
-            fanout=False,
         )
         idx_b = raw_b.select(
             "band",

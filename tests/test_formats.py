@@ -3,6 +3,8 @@ shard layout, and observe-based telemetry."""
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from etl_building_inspector_spark.operators.observe import observe_quality
@@ -41,6 +43,49 @@ def test_format_round_trip_timestamps(spark, sf_dir, tmp_path):
     write_table(ev, p, "csv")
     back = read_table(spark, p, "csv", schema=ev.schema)
     assert _same(ev, back)
+
+
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+
+def test_micros_events_leave_nanos_conf_unset(spark, sf_dir):
+    """The fixtures store ts as TIMESTAMP(MICROS): loading events must
+    not touch the session-global nanosAsLong conf."""
+    load_table(spark, sf_dir, "events").count()
+    assert spark.conf.get(_NANOS_AS_LONG, None) is None
+
+
+def test_nanos_events_read_as_truncated_micros(spark, tmp_path):
+    """A TIMESTAMP(NANOS) events file still loads, with ts truncated to
+    microseconds, and the conf is unset again once it is read."""
+    nanos = [1700000000123456789, 1700000001999999999]
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([1, 2], pa.int64()),
+                "ts": pa.array(nanos, pa.timestamp("ns")),
+            }
+        ),
+        str(tmp_path / "events.parquet"),
+    )
+    ev = load_table(spark, str(tmp_path), "events")
+    assert spark.conf.get(_NANOS_AS_LONG, None) is None
+    got = ev.select("event_id", F.unix_micros("ts").alias("us")).collect()
+    assert sorted(tuple(r) for r in got) == [(1, nanos[0] // 1000), (2, nanos[1] // 1000)]
+
+
+def test_int96_events_are_not_read_as_nanos(spark, tmp_path):
+    """INT96, Spark's default for TIMESTAMP columns, maps to arrow
+    nanoseconds too, but it is not TIMESTAMP(NANOS): it loads as a
+    timestamp without the nanosAsLong conversion."""
+    pq.write_table(
+        pa.table({"ts": pa.array([1700000000123456000], pa.timestamp("ns"))}),
+        str(tmp_path / "events.parquet"),
+        use_deprecated_int96_timestamps=True,
+    )
+    ev = load_table(spark, str(tmp_path), "events")
+    assert dict(ev.dtypes)["ts"] == "timestamp"
+    assert ev.select(F.unix_micros("ts")).first()[0] == 1700000000123456
 
 
 def test_orc_predicate_pushdown(spark, sf_dir, tmp_path):

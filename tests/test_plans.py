@@ -512,12 +512,11 @@ def test_minhash_index_refresh_bounded_shuffles(spark, sf_dir):
     """build(base) + build(batch) + merge + probe-side groupBy is four
     hash shuffles of SUMMARY rows; the probe join itself must stay an
     equi join (the index side is one row per (band, key), so a nested
-    loop would mean the key columns got lost). The r10 optimization
-    round added up to 3 scan fan-out repartitions of the raw (id,
-    text) inputs (operators/_parallel.fan_out_scan, guide 2.5: the
-    single-row-group fixture scan otherwise serializes the sha256
-    shingle pass onto 1-2 cores) -- those are narrow-input round
-    robins, not summary-row shuffles. The realized plan holds 7
+    loop would mean the key columns got lost). Each of the 3 raw (id,
+    text) inputs is a scan of the one-row-group documents file, fewer
+    splits than defaultParallelism, so operators/_parallel.fan_out_scan
+    round-robins it before the sha256 shingle pass -- narrow-input
+    round robins, not summary-row shuffles. The realized plan holds 7
     Exchanges (4 summary-row hash shuffles + 3 fan-out round robins);
     pinned exactly there per ADVICE r10 #4 -- the r10 bound of 8 was
     the theoretical maximum, not the realized count, and the slack

@@ -1,6 +1,7 @@
 """Oracle conformance at sf0.001 for every registered query -- the
 same comparison the driver does at sf0.01 (row count, column names,
-order-insensitive value multiset), run fast enough for CI."""
+order-insensitive value multiset), run fast enough for CI. Every query
+must also return persistent RDDs and active streams to baseline."""
 
 from __future__ import annotations
 
@@ -37,7 +38,18 @@ def duck():
     return con
 
 
+def _baseline(spark):
+    """Persistent RDDs (cached and checkpointed blocks) and active
+    streams, after releasing the tracked intermediates."""
+    _cache.release_persisted()
+    return (
+        spark.sparkContext._jsc.sc().getPersistentRDDs().size(),
+        len(spark.streams.active),
+    )
+
+
 def _assert_matches_oracle(name, spark, duck):
+    base = _baseline(spark)
     sdf = QUERIES[name](spark, SF_DIR)
     spark_cols = sdf.columns
     res = duck.execute(ORACLES[name])
@@ -53,6 +65,7 @@ def _assert_matches_oracle(name, spark, duck):
         tuple(_canon(r[i]) for i in d_idx) for r in res.fetchall()
     )
     assert spark_rows == duck_rows
+    assert _baseline(spark) == base
 
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
@@ -63,8 +76,7 @@ def test_query_matches_oracle(name, spark, duck):
 # Every fixture graph is small enough to finish on the driver, so the
 # oracle sweep above never reaches the distributed rounds of the
 # iterative operators -- the path that runs at scale. These queries
-# run them again with the local finish turned off, and check that each
-# returns its persistent RDDs to baseline.
+# run them again with the local finish turned off.
 ITERATIVE = [
     "dedup_cluster_assign",
     "dedup_cluster_assign_lss",
@@ -79,18 +91,15 @@ ITERATIVE = [
 @pytest.mark.parametrize("name", ITERATIVE)
 def test_iterative_distributed_matches_oracle(name, spark, duck, monkeypatch):
     monkeypatch.setattr(_cache, "LOCAL_FINISH_ROWS", -1)
-    jsc = spark.sparkContext._jsc.sc()
-    _cache.release_persisted()
-    base = jsc.getPersistentRDDs().size()
     _assert_matches_oracle(name, spark, duck)
-    _cache.release_persisted()
-    assert jsc.getPersistentRDDs().size() == base
 
 
 @pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLES)))
 def test_rows_only_queries_run(name, spark):
+    base = _baseline(spark)
     df = QUERIES[name](spark, SF_DIR)
     assert df.count() >= 0
+    assert _baseline(spark) == base
 
 
 def test_entry_smoke(spark):
